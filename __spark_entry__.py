@@ -1881,7 +1881,7 @@ def _q_ann_index_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     batches — a 300-vector backfill @v10, re-embeds (reversed
     vectors) for id%7==0 plus deletes for id%11==0 @v20, and a STALE
     replay (negated vectors) @v5 that must lose to the version guard
-    (the document sink's own merge rules: sinks/merge._merge_apply).
+    (the document sink's own merge rule: sinks/merge._pick_latest).
     Final state must hash-match the oracle's from-scratch encode of
     the surviving rows — restatement equality, which also makes the
     merge arrival-order independent.  Real Structured Streaming run:

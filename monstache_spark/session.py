@@ -144,7 +144,12 @@ def stateful_shuffle_width(spark: SparkSession, cap: int = 8) -> int:
     than the cap is never widened."""
     env = os.environ.get("SPARK_GRAFT_STATE_PARTITIONS", "")
     if env:
-        return max(1, int(env))
+        try:
+            return max(1, int(env))
+        except ValueError:
+            raise ValueError(
+                f"SPARK_GRAFT_STATE_PARTITIONS must be an integer, got {env!r}"
+            ) from None
     return min(shuffle_partitions(spark), cap)
 
 

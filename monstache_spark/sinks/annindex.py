@@ -28,9 +28,9 @@ cell, codes)`` with the ``m`` PQ codes PACKED into one BIGINT
 (``m ≤ 8``, ``k_sub ≤ 256``: 8 bits per subspace), so no array or
 string ever enters an aggregation buffer (HashAggregate everywhere;
 the packed argmin inside :func:`pq_encode` already obeys the same
-rule).  Batch compaction is the all-hash join-back shape: max version
-per key (primitive buffer), then an equi-join retrieves the winning
-row's vector — the vector itself never rides a ``max_by`` buffer.
+rule).  Batch compaction and the cross-batch guard are one keyed
+window pick (``row_number``, no aggregation buffer at all), so the
+vector never rides a ``max_by`` buffer either.
 Commit/versioning/tombstones are the document sink's own
 (:mod:`monstache_spark.sinks.merge`): directory-versioned commits with
 a CURRENT pointer, stale replays lose, a delete beats an equal-version
@@ -38,9 +38,8 @@ upsert, tombstones persist so late stale inserts stay dead.
 
 Scale notes (100 TB): centroids and codebooks are broadcast metadata;
 per-batch assign/encode touches micro-batch-sized rows only; the
-cross-batch merge is two broadcast-able equi-joins on the key (state
-size × batch-key count, no aggregation over state).  Nothing
-corpus-sized reaches the driver.
+cross-batch merge is one exchange of state + batch rows on the key
+(no aggregation over state).  Nothing corpus-sized is collected.
 """
 
 from __future__ import annotations
@@ -51,7 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from monstache_spark.envelope import OP_DELETE
-from monstache_spark.sinks.merge import StateTable, _merge_apply
+from monstache_spark.sinks.merge import TOMB_COL, StateTable, _pick_latest
 from monstache_spark.operators.similarity import pq_codebooks
 
 
@@ -163,12 +162,10 @@ class IvfPqIndexTable:
         arithmetic into EVERY per-batch plan, and each analyzer /
         optimizer pass walks that tree again — per micro-batch the
         driver burned ~1 s building and ~1-2 s optimizing plans whose
-        data work is 300 rows (and ``_merge_apply`` references the
-        encode subtree twice, doubling the walks).  The checkpoint
-        collapses the constants into a single-row ``LogicalRDD`` —
-        the mega-literal plan is analyzed ONCE per table instance,
-        and every batch plan just broadcast-cross-joins one tiny
-        node (guide §7.3 "very large plans: planning time itself
+        data work is 300 rows.  The checkpoint collapses the constants
+        into a single-row ``LogicalRDD`` — the mega-literal plan is
+        analyzed ONCE per table instance, and every batch plan just
+        broadcast-cross-joins one tiny node (guide §7.3 "very large plans: planning time itself
         becomes the bottleneck"; §5 ``localCheckpoint`` truncates
         lineage).  The doubles come from the same
         :meth:`_quantizers` collect and re-enter via ``F.lit`` —
@@ -310,52 +307,26 @@ class IvfPqIndexTable:
         """Apply one micro-batch of envelope ops ``(op, ns, id,
         version, <vec_col>)`` under the document sink's version guard.
 
-        Compaction is ONE keyed window pass: ``row_number`` over
-        ``(ns, id)`` descending by version keeps the winning vector
-        row without a join back (versions are unique per event —
-        envelope contract, so the winner is deterministic); the r14
-        optimization round replaced the ``max(version)``-then-equi-join
-        shape, which cost a second exchange per micro-batch for the
-        same rows (guide §2.4 — the window needs only the one
-        partitioning the aggregate already established).  The winners
-        then assign+encode against the frozen quantizers.  Deletes
-        compact to ``(ns, id, max version)`` tombstones.  The
-        cross-batch rules are :func:`sinks.merge._merge_apply`
-        verbatim."""
-        from pyspark.sql import Window
-
-        ups = ops.filter(F.col("op") != OP_DELETE)
-        w = Window.partitionBy("ns", "id").orderBy(F.col("version").desc())
-        up_rows = (
-            ups.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("ns", "id", "version", self.vec_col)
+        Every op row assigns+encodes against the frozen quantizers (a
+        map-only projection; a delete's payload is nulled into a
+        tombstone row), then the rows meet the stored index rows in
+        :func:`sinks.merge._pick_latest` — one keyed window that is
+        both the batch compaction and the cross-batch guard, so the
+        encode subtree is referenced once and runs once per batch.
+        Encoding is per-row deterministic, so the winner's cell/codes
+        are the ones a compact-then-encode order would produce."""
+        tomb = F.col("op") == OP_DELETE
+        rows = self.encode(
+            ops.select("ns", "id", "version", self.vec_col, tomb.alias(TOMB_COL)),
+            id_col="id",
+        ).select(
+            "ns", "id", "version",
+            *[F.when(~F.col(TOMB_COL), F.col(c)).alias(c) for c in (self.vec_col, "cell", "codes")],
+            TOMB_COL,
         )
-        enriched = self.encode(up_rows, id_col="id").select(
-            "ns", "id", "version", self.vec_col, "cell", "codes"
+        self._state._commit(
+            _pick_latest(self._state.read(include_tombstones=True), rows)
         )
-        # _merge_apply references the batch twice (the keep branch's
-        # version probe and the win branch), which re-executes the
-        # window compaction + encode subtree per reference; persist +
-        # materialize runs it ONCE per batch and the merge reads the
-        # cached micro-batch-sized block (guide §5 — persist when a
-        # frame is reused AND recomputing costs more; persist keeps
-        # the plan's statistics, unlike localCheckpoint, so the merge
-        # joins keep their broadcast-side choice at scale)
-        enriched = enriched.persist()
-        try:
-            enriched.count()
-            tombs = (
-                ops.filter(F.col("op") == OP_DELETE)
-                .groupBy("ns", "id")
-                .agg(F.max("version").alias("version"))
-            )
-            merged = _merge_apply(
-                self._state.read(include_tombstones=True), enriched, tombs
-            )
-            self._state._commit(merged)
-        finally:
-            enriched.unpersist(False)
 
     # -- read side -----------------------------------------------------------
     def read(self) -> DataFrame | None:

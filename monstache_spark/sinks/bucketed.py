@@ -31,12 +31,12 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from monstache_spark.envelope import OP_DELETE, OP_DROP, OP_DROP_DB
-from monstache_spark.operators.materialize import last_state
+from monstache_spark.envelope import OP_DROP, OP_DROP_DB
 from monstache_spark.sinks.merge import (
     TOMB_COL,
+    _batch_rows,
     _erase_dropped,
-    _merge_apply,
+    _pick_latest,
     _prune_old_tombstones,
 )
 
@@ -108,12 +108,7 @@ class BucketedStateTable:
     def merge_batch(self, ops: DataFrame) -> None:
         drops = ops.filter(F.col("op").isin(OP_DROP, OP_DROP_DB))
         data_ops = ops.filter(~F.col("op").isin(OP_DROP, OP_DROP_DB))
-        compacted = last_state(data_ops.filter(F.col("op") != OP_DELETE))
-        tombs = (
-            data_ops.filter(F.col("op") == OP_DELETE)
-            .groupBy("ns", "id")
-            .agg(F.max("version").alias("version"))
-        )
+        batch = _batch_rows(data_ops)
         drop_rows = [
             tuple(r)
             for r in drops.groupBy("op", "ns").agg(F.max("version").alias("v")).collect()
@@ -124,16 +119,13 @@ class BucketedStateTable:
         else:
             touched = {
                 int(r[0])
-                for r in compacted.select(bucket_of(self.n_buckets)).distinct().collect()
-            } | {
-                int(r[0])
-                for r in tombs.select(bucket_of(self.n_buckets)).distinct().collect()
+                for r in batch.select(bucket_of(self.n_buckets)).distinct().collect()
             }
         if not touched and not drop_rows:
             return
 
         current_touched = self.read(buckets=sorted(touched), include_tombstones=True)
-        merged = _merge_apply(current_touched, compacted, tombs)
+        merged = _pick_latest(current_touched, batch)
         merged = _erase_dropped(merged, drop_rows)
         if self.tombstone_retention is not None:
             merged = _prune_old_tombstones(merged, data_ops, self.tombstone_retention)

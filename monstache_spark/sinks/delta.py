@@ -1,6 +1,6 @@
 """Delta-backed state table — the 100 TB deployment answer to
-``StateTable``'s parquet+CURRENT-pointer commit (merge.py:187-194,
-which is single-writer by construction).
+``StateTable``'s parquet+CURRENT-pointer commit
+(``merge.StateTable._commit``, which is single-writer by construction).
 
 Same public surface (``read`` / ``merge_batch``) and the SAME
 version-guard semantics (test-pinned by tests/test_delta_state.py
@@ -10,12 +10,12 @@ tests are the oracle), but the cross-batch guard runs as a Delta
 files) via Delta's data skipping instead of a full-table rewrite:
 
 * batch staging (within-batch ties: delete beats upsert at the same
-  version) is ``merge.py:_stage_batch`` — one code path for every
-  backend;
+  version) is ``merge.py:_stage_batch`` — the parquet backend's
+  ``_pick_latest`` with no stored rows;
 * cross-batch ties land in the MERGE predicate: a staged row replaces
   a stored row iff ``version > stored.version`` OR (equal version AND
-  the stored row is not a tombstone) — the exact complement of the
-  keep rule in ``merge.py:_merge_apply``;
+  the stored row is not a tombstone) — ``_pick_latest``'s
+  ``(version, _tomb, from_batch)`` order spelled as a predicate;
 * drops (K6) become version-scoped Delta DELETEs;
 * tombstone retention is a DELETE sweep below the batch high-water
   mark.
@@ -31,17 +31,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from monstache_spark.envelope import OP_DELETE, OP_DROP, OP_DROP_DB
+from monstache_spark.envelope import OP_DROP, OP_DROP_DB
 from monstache_spark.operators.filters import ns_database
-from monstache_spark.operators.materialize import last_state
-from monstache_spark.sinks.merge import TOMB_COL, _stage_batch
+from monstache_spark.sinks.merge import TOMB_COL, _batch_rows, _stage_batch
 
 
 # The cross-batch MERGE update predicate — the ONE piece of semantics
 # this backend adds over the shared ``_stage_batch``: a staged row
 # replaces a stored row iff strictly newer, or tied with a
-# non-tombstone stored row (the exact complement of
-# merge.py:_merge_apply's keep rule).  Module-level so the
+# non-tombstone stored row (merge.py:_pick_latest's order with the
+# staged row as ``from_batch = 1``; at a tie of two tombstones either
+# row is the same).  Module-level so the
 # delta-less equivalence test (test_delta_state.py's simulated
 # transactional backend) exercises THIS string, not a re-typed copy.
 MERGE_UPDATE_CONDITION = (
@@ -123,27 +123,13 @@ class DeltaStateTable:
             tuple(r)
             for r in drops.groupBy("op", "ns").agg(F.max("version").alias("v")).collect()
         ]
-        if self.payload_cols is None:
-            compacted = last_state(data_ops.filter(F.col("op") != OP_DELETE))
-        else:
-            compacted = last_state(
-                data_ops.filter(F.col("op") != OP_DELETE), payload_cols=self.payload_cols
-            )
-        tombs = (
-            data_ops.filter(F.col("op") == OP_DELETE)
-            .groupBy("ns", "id")
-            .agg(F.max("version").alias("version"))
-        )
-        staged = _stage_batch(compacted, tombs)
+        staged = _stage_batch(_batch_rows(data_ops, self.payload_cols))
 
         if not self._exists():
             staged.write.format("delta").mode("overwrite").save(self.path)
         else:
-            # cross-batch guard as the MERGE predicate — exact
-            # complement of merge.py:_merge_apply's keep rule: the
-            # staged row wins iff strictly newer, or tied with a
-            # non-tombstone stored row (delete beats equal-version
-            # upsert across batches too)
+            # cross-batch guard as the MERGE predicate
+            # (MERGE_UPDATE_CONDITION: merge.py:_pick_latest's order)
             (
                 self._table()
                 .alias("t")

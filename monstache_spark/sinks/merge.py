@@ -14,10 +14,15 @@ idempotent MERGE per micro-batch:
       WHEN MATCHED AND src.version >= tgt.version THEN UPDATE
       WHEN NOT MATCHED AND src.op != 'd' THEN INSERT
 
-Without Delta/Iceberg jars in this image, the MERGE is emulated with
-the standard anti-join + union rewrite over parquet, atomically swapped
-via directory versioning. On a real lakehouse this maps 1:1 onto
-``MERGE INTO`` (and the version guard rides along unchanged).
+Without Delta/Iceberg jars in this image, the MERGE is emulated over
+parquet as ONE keyed pick over ONE union, atomically swapped via
+directory versioning: the stored rows and the batch's raw data ops
+(mapped to the state schema, a delete as a null-payload tombstone row)
+share one exchange on ``(ns, id)``, and per key the row with the
+largest ``(version, _tomb, from_batch)`` is kept (``_pick_latest``).
+Batch compaction and the cross-batch version guard are that same pick.
+On a real lakehouse this maps 1:1 onto ``MERGE INTO`` (and the version
+guard rides along unchanged — ``sinks/delta.py``).
 
 Drop propagation (K6, doDrop monstache.go:3056-3075): ``drop``/
 ``dropDatabase`` ops delete state rows of the matching namespace(s)
@@ -41,98 +46,82 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from monstache_spark.envelope import OP_DELETE, OP_DROP, OP_DROP_DB
 from monstache_spark.operators.filters import ns_database
-from monstache_spark.operators.materialize import last_state
+from monstache_spark.operators.materialize import _STATE_COLS
 
 # marker column for persisted delete tombstones (hidden from read())
 TOMB_COL = "_tomb"
+# merge-time helper columns, never committed
+_FROM_BATCH = "_from_batch"
+_RANK = "_rank"
 
 
-def _tomb_rows(tombs: DataFrame, like: DataFrame) -> DataFrame:
-    """Expand (ns, id, version) tombstones to ``like``'s schema with
-    typed-null payload columns and ``_tomb=true``."""
-    cols = []
-    for f in like.schema.fields:
-        if f.name in ("ns", "id", "version"):
-            cols.append(F.col(f.name))
-        else:
-            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-    return tombs.select(*cols).withColumn(TOMB_COL, F.lit(True))
-
-
-def _stage_batch(upserts: DataFrame, tombs: DataFrame) -> DataFrame:
-    """Compact one batch to a single row per key with the WITHIN-batch
-    tie rules applied (delete beats upsert at the same version):
-    surviving upserts carry ``_tomb = False``, surviving deletes become
-    tombstone rows. Shared by every state backend — the cross-batch
-    guard differs per backend (anti-join here, MERGE predicate in the
-    Delta variant), the batch staging must not."""
-    tv = tombs.select("ns", "id", F.col("version").alias("v_del"))
-    up_live = (
-        upserts.join(tv, ["ns", "id"], "left")
-        .filter(F.col("v_del").isNull() | (F.col("version") > F.col("v_del")))
-        .drop("v_del")
-        .withColumn(TOMB_COL, F.lit(False))
-    )
-    uv = upserts.groupBy("ns", "id").agg(F.max("version").alias("v_up"))
-    tomb_live = (
-        tombs.join(uv, ["ns", "id"], "left")
-        .filter(F.col("v_up").isNull() | (F.col("version") >= F.col("v_up")))
-        .drop("v_up")
-    )
-    return up_live.unionByName(_tomb_rows(tomb_live, upserts))
-
-
-def _merge_apply(
-    current: DataFrame | None, upserts: DataFrame, tombs: DataFrame
+def _batch_rows(
+    data_ops: DataFrame, payload_cols: tuple[str, ...] | None = None
 ) -> DataFrame:
-    """anti-join + union MERGE emulation with the version guard.
+    """A batch's data ops in the state schema, uncompacted: an insert or
+    update carries each payload column ``c`` (default: the testdata
+    envelope's ``_STATE_COLS``) as ``last_<c>`` with ``_tomb = false``;
+    a delete becomes a tombstone row (``_tomb = true``, null payload).
+    ``op`` is never stored.  One projection, so the merge scans the
+    batch once."""
+    if payload_cols is None:
+        payload_cols = _STATE_COLS
+    tomb = F.col("op") == OP_DELETE
+    payload = [F.when(~tomb, F.col(c)).alias(f"last_{c}") for c in payload_cols if c != "op"]
+    return data_ops.select("ns", "id", *payload, "version", tomb.alias(TOMB_COL))
 
-    Tie convention (documented, test-pinned, batch-boundary-invariant):
-    a delete beats an upsert at the same version, whether they meet
-    inside one batch OR across batches — so ``[delete v, insert v]``
-    stays dead no matter where the batch boundary falls. This matches
-    ES external versioning, where an index at version <= a stored
-    tombstone's version is rejected (monstache.go:4053-4063,
-    gc_deletes monstache.go:4077-4080). Between two non-delete rows
-    the batch row beats the stored row at the same version (ES accepts
-    version >= stored for upserts). Tombstones persist into the
-    committed state so stale inserts in LATER batches stay dead."""
-    new = _stage_batch(upserts, tombs)
-    if current is None:
-        return new
-    if TOMB_COL not in current.columns:  # table written before tombstone support
-        current = current.withColumn(TOMB_COL, F.lit(False))
-    # At a version tie the stored row wins iff it is a tombstone (delete
-    # beats equal-version upsert across batches too); `keep` and `win`
-    # are exact complements, so every matched key lands exactly once.
-    nv = new.select("ns", "id", F.col("version").alias("v_new"))
-    keep = (
-        current.join(nv, ["ns", "id"], "left")
-        .filter(
-            F.col("v_new").isNull()
-            | (F.col("version") > F.col("v_new"))
-            | ((F.col("version") == F.col("v_new")) & F.col(TOMB_COL))
+
+def _pick_latest(current: DataFrame | None, batch: DataFrame) -> DataFrame:
+    """The version guard — the ONE statement of the tie rules for every
+    state backend: per ``(ns, id)`` over the stored rows and the batch
+    rows (both in the state schema, with ``_tomb``), keep the row with
+    the lexicographically largest ``(version, _tomb, from_batch)``.
+
+    Newer versions win; at one version a delete beats an upsert, inside
+    a batch or across batches (ES external versioning rejects an index
+    at or below a stored tombstone's version, monstache.go:4053-4063,
+    gc_deletes monstache.go:4077-4080), so ``[delete v, insert v]``
+    stays dead wherever the batch boundary falls; between two upserts
+    (or two identical tombstones) the batch row beats the stored one
+    (ES accepts version >= stored for upserts).  Tombstones persist in
+    the committed state so stale inserts in LATER batches stay dead.
+
+    One window over one union: a single exchange on the key, which is
+    also the batch's compaction (``row_number() = 1`` lets Spark limit
+    each key's rows map-side before the shuffle)."""
+    rows = batch.withColumn(_FROM_BATCH, F.lit(1))
+    if current is not None:
+        if TOMB_COL not in current.columns:  # table written before tombstone support
+            current = current.withColumn(TOMB_COL, F.lit(False))
+        rows = current.withColumn(_FROM_BATCH, F.lit(0)).unionByName(rows)
+    w = Window.partitionBy("ns", "id").orderBy(
+        F.col("version").desc(), F.col(TOMB_COL).desc(), F.col(_FROM_BATCH).desc()
+    )
+    return (
+        rows.withColumn(_RANK, F.row_number().over(w))
+        .filter(F.col(_RANK) == 1)
+        .drop(_RANK, _FROM_BATCH)
+    )
+
+
+def _stage_batch(batch: DataFrame, tombs: DataFrame | None = None) -> DataFrame:
+    """Compact one batch to one row per key: ``_pick_latest`` with no
+    stored rows (the Delta backend's staging, whose MERGE predicate
+    then applies the cross-batch half of the same rule).  ``batch`` is
+    state-schema rows with ``_tomb`` (``_batch_rows``), or, with
+    ``tombs``, upsert rows without ``_tomb`` plus ``(ns, id, version)``
+    delete keys that join as null-payload tombstones."""
+    if tombs is not None:
+        batch = batch.withColumn(TOMB_COL, F.lit(False)).unionByName(
+            tombs.withColumn(TOMB_COL, F.lit(True)), allowMissingColumns=True
         )
-        .drop("v_new")
-    )
-    cv = current.select(
-        "ns", "id", F.col("version").alias("v_cur"), F.col(TOMB_COL).alias("_cur_tomb")
-    )
-    win = (
-        new.join(cv, ["ns", "id"], "left")
-        .filter(
-            F.col("v_cur").isNull()
-            | (F.col("version") > F.col("v_cur"))
-            | ((F.col("version") == F.col("v_cur")) & ~F.col("_cur_tomb"))
-        )
-        .drop("v_cur", "_cur_tomb")
-    )
-    return keep.unionByName(win)
+    return _pick_latest(None, batch)
 
 
 def _erase_dropped(state: DataFrame, drop_rows: list[tuple]) -> DataFrame:
@@ -218,12 +207,15 @@ class StateTable:
         self.tombstone_retention = tombstone_retention
         # payload carried per key into the materialized row; None = the
         # testdata envelope default (operators.materialize._STATE_COLS).
-        # Dynamic-doc pipelines pass e.g. ("op","ts","ts_ord","doc") —
-        # note a STRING payload (doc) puts a string in the max_by
-        # aggregation buffer, degrading that compaction to
-        # SortAggregate; inherent when the payload is the document
-        # itself (the reference ships the doc per op too).
+        # Dynamic-doc pipelines pass e.g. ("op","ts","ts_ord","doc");
+        # the payload rides the merge's window pick, never an
+        # aggregation buffer, so a string payload costs no SortAggregate.
         self.payload_cols = payload_cols
+        # (version, StructType) of the last version THIS instance
+        # committed: metadata, not results — it spares read() the
+        # parquet footer-inference job while CURRENT still names that
+        # version.  A fresh instance (e.g. on restart) infers once.
+        self._known_schema: tuple[int, StructType] | None = None
         os.makedirs(path, exist_ok=True)
 
     def _current_file(self) -> str:
@@ -240,7 +232,10 @@ class StateTable:
         v = self._current_version()
         if v == 0:
             return None
-        df = self.spark.read.parquet(os.path.join(self.path, f"v{v}"))
+        reader = self.spark.read
+        if self._known_schema is not None and self._known_schema[0] == v:
+            reader = reader.schema(self._known_schema[1])
+        df = reader.parquet(os.path.join(self.path, f"v{v}"))
         if TOMB_COL not in df.columns:  # table written before tombstone support
             return df
         if include_tombstones:
@@ -253,6 +248,7 @@ class StateTable:
         df.write.mode("overwrite").parquet(new_dir)
         with open(self._current_file(), "w") as f:
             f.write(str(v + 1))
+        self._known_schema = (v + 1, df.schema)
         old_dir = os.path.join(self.path, f"v{v}")
         if v and os.path.isdir(old_dir):
             shutil.rmtree(old_dir, ignore_errors=True)
@@ -267,19 +263,9 @@ class StateTable:
             tuple(r)
             for r in drops.groupBy("op", "ns").agg(F.max("version").alias("v")).collect()
         ]
-        if self.payload_cols is None:
-            compacted = last_state(data_ops.filter(F.col("op") != OP_DELETE))
-        else:
-            compacted = last_state(
-                data_ops.filter(F.col("op") != OP_DELETE), payload_cols=self.payload_cols
-            )
-        # deletes must survive compaction as tombstones to beat older upserts
-        tombs = (
-            data_ops.filter(F.col("op") == OP_DELETE)
-            .groupBy("ns", "id")
-            .agg(F.max("version").alias("version"))
+        merged = _pick_latest(
+            self.read(include_tombstones=True), _batch_rows(data_ops, self.payload_cols)
         )
-        merged = _merge_apply(self.read(include_tombstones=True), compacted, tombs)
         merged = _erase_dropped(merged, drop_rows)
         if self.tombstone_retention is not None:
             merged = _prune_old_tombstones(merged, data_ops, self.tombstone_retention)

@@ -361,3 +361,13 @@ def test_relate_mapping_subkey_spellings_match_reference():
     im = _re.search(r"type indexMapping struct \{(.*?)\}", src, _re.S).group(1)
     assert _re.search(r"^\tNamespace\s", im, _re.M)
     assert _re.search(r"^\tIndex\s", im, _re.M)
+
+
+def test_malformed_state_partitions_names_the_knob(spark, monkeypatch):
+    from monstache_spark.session import stateful_shuffle_width
+
+    monkeypatch.setenv("SPARK_GRAFT_STATE_PARTITIONS", "8x")
+    with _pytest.raises(ValueError, match="SPARK_GRAFT_STATE_PARTITIONS"):
+        stateful_shuffle_width(spark)
+    monkeypatch.setenv("SPARK_GRAFT_STATE_PARTITIONS", "3")
+    assert stateful_shuffle_width(spark) == 3
